@@ -675,27 +675,26 @@ def ivf_cell_vectorized(
     return pandas_udf("int")(_cell_impl)(vec)
 
 
-def gram_matrix_fast(
+def gram_matrix(
     emb: DataFrame,
     vec_col: str = "embedding",
     scale: float = 1048576.0,
 ) -> DataFrame:
-    """The one-pass 100 TB path for the s10 gram matrix: each
-    partition accumulates its own G = fᵀf over the FIXED-POINT
-    coordinates with a numpy matmul (``mapInArrow`` — the vectors are
-    already Arrow when they cross from the JVM; no explode, no
-    per-coordinate rows), emits one 2080-row upper-triangle partial,
-    and one bounded (i, j) agg merges the partials. The corpus
-    crosses the wire ONCE as vectors instead of 64× as exploded
-    coordinates.
+    """The 64×64 embedding gram matrix as exact sufficient statistics
+    (s10): per upper-triangle (i, j) the pair count, Σf_i, Σf_j and
+    Σf_i·f_j over the fixed-point coordinates f = floor(v·scale).
 
-    Exactness discipline: per numpy BATCH the int64 matmul is safe
-    (|f| ≤ 2²⁰ ⟹ a 65k-row batch's cell ≤ 2⁵⁶); batches then
-    accumulate into arbitrary-precision PYTHON ints, the partial
-    ships the cell as a decimal STRING, and the merge sums
-    DECIMAL(38,0) — so the result equals the exact explode form
-    bit-for-bit at any corpus size (registered against the SAME
-    oracle as s10; equality also test-pinned)."""
+    Each partition accumulates its own G = fᵀf with a numpy matmul
+    (``mapInArrow`` — the vectors are already Arrow when they cross
+    from the JVM; no explode, no per-coordinate rows), emits one
+    upper-triangle partial, and one bounded (i, j) agg merges the
+    partials. The corpus crosses the wire ONCE as vectors.
+
+    Exactness: per numpy BATCH the int64 matmul is safe (|f| ≤ 2²⁰ ⟹
+    a 65k-row batch's cell ≤ 2⁵⁶); batches then accumulate into
+    arbitrary-precision PYTHON ints, the partial ships the cell as a
+    decimal STRING, and the merge sums DECIMAL(38,0) — exact at any
+    corpus size."""
     from pyspark.sql import types as T
 
     out_schema = T.StructType([
@@ -752,24 +751,24 @@ def gram_matrix_fast(
     )
 
 
-def nearest_centroid_confusion_fast(
+def nearest_centroid_confusion(
     emb: DataFrame,
     vec_col: str = "embedding",
     label_col: str = "label",
     scale: float = 1048576.0,
 ) -> DataFrame:
-    """The one-pass 100 TB path for s05's prototype eval: instead of
-    exploding every vector into 64 coordinate rows and joining the
-    centroid table (corpus×64 rows through an exchange), the BOUNDED
-    centroid table (|labels|·64 entries, from the same exact integer
-    sums as s04) is collected and closed over, and a ``mapInArrow``
-    stage classifies each Arrow batch with numpy — per candidate
-    centroid the per-dim fixed-point terms floor((v−c)²·2²⁰) are
-    IDENTICAL IEEE double ops to the expression form, summed in int64
-    (≤ 64·2⁴²), so the argmin (tie → lowest centroid label, which is
-    numpy's first-minimum when candidates are sorted) is bit-equal.
-    Emits per-partition confusion partials; one bounded agg merges.
-    Registered against the SAME oracle as s05."""
+    """Nearest-label-centroid confusion matrix (s05's prototype eval):
+    (label, assigned, n_vecs).
+
+    The BOUNDED centroid table (|labels|·dim entries, s04's exact
+    integer sums divided once) is collected and closed over, and a
+    ``mapInArrow`` stage classifies each Arrow batch with numpy: per
+    candidate centroid the per-dim fixed-point terms
+    floor((v−c)²·scale) are summed in int64 (≤ 64·2⁴²), and the argmin
+    tie goes to the lowest centroid label (numpy's first minimum over
+    label-sorted candidates). The corpus crosses once as vectors, not
+    dim× as exploded join rows; per-partition confusion partials merge
+    in one bounded agg."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -842,25 +841,25 @@ def nearest_centroid_confusion_fast(
     )
 
 
-def kmeans_fixed_fast(
+def kmeans_fixed(
     emb: DataFrame,
     k: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: float = 1048576.0,
 ) -> DataFrame:
-    """The one-pass-per-round 100 TB path for s08's fixed-point
-    k-means: each Lloyd round is ONE ``mapInArrow`` sweep that
-    assigns a batch with an int64 numpy matmul (the ‖f‖²−2f·c+‖c‖²
-    decomposition is exact integer arithmetic, ≤2⁴⁷; np.argmin's
-    first-minimum IS the lowest-cid tie rule when centroid rows are
-    cid-ordered) and accumulates per-(cid, dim) coordinate sums —
-    int64 per batch, python-int across batches, DECIMAL(38,0) across
-    partitions — then a bounded k·dim merge yields the next round's
-    centroids (collected: 512 rows, the legitimate driver round-trip).
-    Two rounds, like s08; empty clusters drop exactly as the join
-    form drops them. Output identical to s08: (cid, dim,
-    centroid_fixed, n_members), registered against the SAME oracle."""
+    """Bit-deterministic fixed-point k-means (s08): seeds are the k
+    lowest ids, two Lloyd rounds over f = floor(v·scale), output
+    (cid, dim, centroid_fixed, n_members) of the final assignment.
+
+    Each round is ONE ``mapInArrow`` sweep that assigns a batch with an
+    int64 numpy matmul (the ‖f‖²−2f·c+‖c‖² decomposition is exact
+    integer arithmetic, ≤2⁴⁷; np.argmin's first minimum IS the
+    lowest-cid tie rule when centroid rows are cid-ordered) and
+    accumulates per-(cid, dim) coordinate sums — int64 per batch,
+    python-int across batches, DECIMAL(38,0) across partitions — then a
+    bounded k·dim merge yields the next round's centroids (collected:
+    the legitimate driver round-trip). Empty clusters drop out."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -948,7 +947,7 @@ def kmeans_fixed_fast(
     for r in c1_rows:
         C1[li[r["cid"]], r["dim"]] = r["centroid_fixed"]
     # round 2: assign to c1, merge — this IS the final (centroid,
-    # members) table, exactly like s08's trailing update aggregate
+    # members) table
     return sweep(C1, np.array(live, dtype=np.int64))
 
 
@@ -1162,7 +1161,6 @@ def knn_ivf_pq(
     k: int = 5,
     probes: int = IVF_PROBES,
     anchors: list[list[float]] | None = None,
-    fast: bool = False,
     subspaces: int = PQ_SUBSPACES,
     codes: int = PQ_CODES,
     dim: int = EMBED_DIM,
@@ -1179,24 +1177,14 @@ def knn_ivf_pq(
     folds as product_quantize (query floats floored once, codewords
     are integer literals), so the ADC distance — an APPROXIMATION of
     the true distance — is itself computed exactly and cross-engine
-    hashable.  Plan: corpus projection (cell + codes, one pass),
-    bounded query-set broadcast (cell-exploded probes + the 32 LUT
-    columns), one equi-join on cell, one per-query rank window."""
+    hashable.  Plan: corpus coding (cell + codes, one
+    :func:`pq_cell_codes` sweep), bounded query-set broadcast
+    (cell-exploded probes + the 32 LUT columns), one equi-join on
+    cell, one per-query rank window."""
     anchors = anchors or ivf_anchors()
     sub = dim // subspaces
     books = pq_codebooks_fixed(subspaces, codes, dim)
-    if fast:
-        # one mapInArrow sweep; bit-equal by the twin contract
-        corpus = pq_cell_codes_fast(emb, anchors, subspaces, codes, dim)
-    else:
-        corpus = product_quantize(
-            emb.withColumn("_cell", ivf_cell(F.col("embedding"), anchors)),
-            subspaces,
-            codes,
-            keep_cols=("_cell",),
-            dim=dim,
-        )
-    corpus = corpus.withColumn("_cell", F.col("_cell").cast("long"))
+    corpus = pq_cell_codes(emb, anchors, subspaces, codes, dim)
     lut_cols = []
     for s, book in enumerate(books):
         sl = F.slice(F.col("embedding"), s * sub + 1, sub)
@@ -1248,19 +1236,21 @@ def knn_ivf_pq(
     )
 
 
-def pq_cell_codes_fast(
+def pq_cell_codes(
     emb: DataFrame,
     anchors: list[list[float]] | None = None,
     subspaces: int = PQ_SUBSPACES,
     codes: int = PQ_CODES,
     dim: int = EMBED_DIM,
 ) -> DataFrame:
-    """The one-pass 100 TB corpus side for IVF-ADC: ONE ``mapInArrow``
-    sweep emits (vec_id, cell, PQ codes) — the corpus crosses the JVM
-    boundary once as Arrow vectors instead of evaluating 16 float-dot
-    folds + 32 fixed-point folds as interpreted expressions per row.
+    """IVF cell + PQ codes of every corpus vector: ONE ``mapInArrow``
+    sweep emits (vec_id, _cell, code_s*) — the corpus crosses the JVM
+    boundary once as Arrow vectors instead of evaluating one float-dot
+    fold per anchor + one fixed-point fold per codeword as interpreted
+    expressions per row, and planning cost does not grow with the
+    anchor count.
 
-    Bit-equality with the expression form (the twin contract):
+    Bit-equal to :func:`ivf_cell` + :func:`product_quantize`:
     - cell scores repeat the EXACT sequential left-to-right double
       fold of dedup.dot_product (a dim-loop of elementwise adds — not
       numpy's pairwise sum), so every IEEE intermediate matches;
@@ -1358,7 +1348,6 @@ def pq_dedup_cascade(
     subspaces: int = PQ_SUBSPACES,
     codes: int = PQ_CODES,
     dim: int = EMBED_DIM,
-    fast: bool = False,
 ) -> DataFrame:
     """The production two-stage near-dup pattern with a PQ prefilter:
     candidate pairs inside an IVF cell are scored by SDC — four
@@ -1369,38 +1358,22 @@ def pq_dedup_cascade(
     the prefilter (how loose must ``sdc_bound`` be to keep the true
     pairs ``exact_bound`` defines).
 
-    Scale shape: cell-blocked self-join (the d09 discipline — never
-    all-pairs), SDC is a per-row projection over the code columns, and
-    the exact verify re-joins the vectors ONLY for survivors.  At
-    100 TB the survivor set is the filter's whole point.
-
-    ``fast=True`` codes the corpus via :func:`pq_cell_codes_fast`
-    (one mapInArrow sweep) instead of the expression form — REQUIRED
-    once ``anchors`` is large (e.g. ``suggest_cells``-scaled at 100x
-    corpus): hundreds of anchors as unrolled literal dot products blow
-    up Catalyst planning (the NEXT.md dead end).  Bit-identical output
-    by the certified twin contract (pq_fuzz: expression and mapInArrow
-    corpus coding agree exactly across 5k random geometries)."""
+    Scale shape: the corpus is coded by one :func:`pq_cell_codes`
+    sweep (so ``suggest_cells``-scaled anchor sets cost no planning),
+    cell-blocked self-join (the d09 discipline — never all-pairs), SDC
+    is a per-row projection over the code columns, and the exact
+    verify re-joins the vectors ONLY for survivors.  At 100 TB the
+    survivor set is the filter's whole point."""
     anchors = anchors or ivf_anchors()
-    if fast:
-        corpus = pq_cell_codes_fast(emb, anchors, subspaces, codes, dim)
-    else:
-        corpus = product_quantize(
-            emb.withColumn("_cell", ivf_cell(F.col("embedding"), anchors)),
-            subspaces,
-            codes,
-            keep_cols=("_cell",),
-            dim=dim,
-        )
+    corpus = pq_cell_codes(emb, anchors, subspaces, codes, dim)
     tables = pq_sdc_tables(subspaces, codes, dim)
     # NOTE (r14): a shared .repartition("_cell") exchange (the s06 /
     # d09 fix) was tried here and REVERTED: with the oracle's fixed 16
     # cells it caps the pair-scoring stage at 16 tasks (measured 7.2 →
     # 12.5 s at sf0.1), while the planner's broadcast keeps scoring on
-    # the scan's full parallelism.  The double PQ-coding this leaves is
-    # an oracle-form artifact only — the 100 TB path is fast=True with
-    # suggest_cells-scaled anchors, where the cell count (not 16)
-    # provides the parallelism and no side can be broadcast anyway.
+    # the scan's full parallelism.  At 100 TB the anchors are
+    # suggest_cells-scaled, so the cell count (not 16) provides the
+    # parallelism and no side can be broadcast anyway.
     a, b = corpus.alias("a"), corpus.alias("b")
     pairs = a.join(
         b,

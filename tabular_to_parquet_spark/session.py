@@ -95,6 +95,13 @@ def parse_extra_conf(env_conf: str) -> tuple[dict[str, str], list[str]]:
     return confs, bad
 
 
+def effective_cpus() -> int:
+    """Core count the engine runs with: ``$SPARK_GRAFT_CPUS`` when set,
+    else the host CPU count (``local[N]`` master and default shuffle
+    partitions in :func:`get_spark`)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
 def get_spark(
     app_name: str = "tabular_to_parquet_spark",
     master: str | None = None,
@@ -108,7 +115,7 @@ def get_spark(
     locally we default to the CPU count so tiny data isn't
     over-parallelized (AQE coalesces further at runtime).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = effective_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

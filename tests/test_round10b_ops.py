@@ -564,7 +564,21 @@ def test_ivf_pq_adc_distances_match_recompute(spark):
 
 
 def test_ivf_pq_fast_twin_equals_expression_form(spark):
-    from tabular_to_parquet_spark.operators.similarity import knn_ivf_pq
+    # knn_ivf_pq codes its corpus with the mapInArrow sweep; the search
+    # must equal one rebuilt on the expression coding (ivf_cell +
+    # product_quantize) with expression probes and exact integer LUTs
+    import math
+
+    from pyspark.sql import functions as F
+
+    from tabular_to_parquet_spark.operators.similarity import (
+        ivf_anchors,
+        ivf_cell,
+        ivf_probe_cells,
+        knn_ivf_pq,
+        pq_codebooks_fixed,
+        product_quantize,
+    )
 
     vecs = [
         (i, [((i * 23 + d * 3) % 29 - 14) / 14.0 for d in range(64)])
@@ -572,13 +586,43 @@ def test_ivf_pq_fast_twin_equals_expression_form(spark):
     ]
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     q = emb.filter("vec_id % 8 = 0")
+    anchors = ivf_anchors()
     cols = ["query_id", "neighbor_id", "adc_dist_fixed", "rank"]
-    slow = sorted(tuple(r[c] for c in cols) for r in knn_ivf_pq(emb, q, k=4).collect())
     fast = sorted(
-        tuple(r[c] for c in cols)
-        for r in knn_ivf_pq(emb, q, k=4, fast=True).collect()
+        tuple(r[c] for c in cols) for r in knn_ivf_pq(emb, q, k=4).collect()
     )
-    assert slow == fast and slow
+    coded = {
+        r["vec_id"]: (int(r["_cell"]), [r[f"code_s{s}"] for s in range(4)])
+        for r in product_quantize(
+            emb.withColumn("_cell", ivf_cell(F.col("embedding"), anchors)),
+            keep_cols=("_cell",),
+        ).collect()
+    }
+    probes = {
+        r["vec_id"]: {int(c) for c in r["p"]}
+        for r in q.select(
+            "vec_id",
+            ivf_probe_cells(F.col("embedding"), anchors=anchors).alias("p"),
+        ).collect()
+    }
+    books = pq_codebooks_fixed()
+    vec_of = dict(vecs)
+    want = []
+    for qid, cells in probes.items():
+        qf = [math.floor(x * 1048576.0) for x in vec_of[qid]]
+        scored = []
+        for vid, (cell, codes) in coded.items():
+            if vid == qid or cell not in cells:
+                continue
+            d = sum(
+                (qf[s * 16 + i] - books[s][codes[s]][i]) ** 2
+                for s in range(4)
+                for i in range(16)
+            )
+            scored.append((d, vid))
+        for rank, (d, vid) in enumerate(sorted(scored)[:4], start=1):
+            want.append((qid, vid, d, rank))
+    assert fast == sorted(want) and fast
 
 
 # ---------------------------------------------------------------------------

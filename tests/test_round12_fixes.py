@@ -52,22 +52,23 @@ def test_gd_values_unchanged_after_literal_n(spark):
     assert _spark_gd(spark, X, y, 3) == _np_gd(X, y, 3)
 
 
-def test_pq_dedup_cascade_fast_twin(spark):
-    # fast=True (mapInArrow corpus coding) must be row-identical to
-    # the expression form — including with a non-default, larger
-    # anchor set (the suggest_cells scale path it exists for)
+def _pq_clone_corpus(spark):
+    # 80 random vectors + 5 planted near-dup clones, coded against a
+    # non-default, larger anchor set (the suggest_cells scale path)
     import random
+
+    from pyspark.sql import functions as F
 
     from tabular_to_parquet_spark.operators.similarity import (
         ivf_anchors,
-        pq_dedup_cascade,
+        ivf_cell,
+        product_quantize,
     )
 
     rng = random.Random(12)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(80)
     ]
-    # planted near-dups: clone a few vectors with tiny perturbations
     for j in range(5):
         base = rows[j][1]
         rows.append((1000 + j, [x + 1e-4 for x in base]))
@@ -75,11 +76,68 @@ def test_pq_dedup_cascade_fast_twin(spark):
         rows, "vec_id long, embedding array<float>"
     )
     anchors = ivf_anchors(cells=32)
-    kw = dict(anchors=anchors)
-    slow = pq_dedup_cascade(emb, 10**13, 10**13, **kw).collect()
-    fastr = pq_dedup_cascade(emb, 10**13, 10**13, fast=True, **kw).collect()
-    assert sorted(map(tuple, slow)) == sorted(map(tuple, fastr))
-    assert len(slow) > 0  # the planted clones must survive the cascade
+    expr = product_quantize(
+        emb.withColumn("_cell", ivf_cell(F.col("embedding"), anchors)),
+        keep_cols=("_cell",),
+    )
+    return emb, anchors, expr
+
+
+def test_pq_cell_codes_match_expression_coding(spark):
+    # the one-sweep corpus coding behind s13/d20 must equal ivf_cell +
+    # product_quantize
+    from tabular_to_parquet_spark.operators.similarity import pq_cell_codes
+
+    emb, anchors, expr = _pq_clone_corpus(spark)
+    cols = ["vec_id", "_cell"] + [f"code_s{s}" for s in range(4)]
+    want = sorted(tuple(r[c] for c in cols) for r in expr.collect())
+    got = sorted(
+        tuple(r[c] for c in cols)
+        for r in pq_cell_codes(emb, anchors).collect()
+    )
+    assert got == want
+    assert len({r[1] for r in got}) > 1  # several cells in play
+
+
+def test_pq_dedup_cascade_fast_twin(spark):
+    # the cascade (mapInArrow corpus coding) must be row-identical to
+    # the cascade rebuilt on the expression coding: same-cell pairs,
+    # SDC from the code tables, exact fixed-point verification
+    import math
+
+    from tabular_to_parquet_spark.operators.similarity import (
+        pq_dedup_cascade,
+        pq_sdc_tables,
+    )
+
+    emb, anchors, expr = _pq_clone_corpus(spark)
+    bound = 10**13
+    got = sorted(
+        map(tuple, pq_dedup_cascade(emb, bound, bound, anchors=anchors).collect())
+    )
+    coded = {
+        r["vec_id"]: (int(r["_cell"]), [r[f"code_s{s}"] for s in range(4)])
+        for r in expr.collect()
+    }
+    fixed = {
+        r["vec_id"]: [math.floor(x * 1048576.0) for x in r["embedding"]]
+        for r in emb.collect()
+    }
+    tables = pq_sdc_tables()
+    want = []
+    for a, (cell_a, ca) in coded.items():
+        for b, (cell_b, cb) in coded.items():
+            if a >= b or cell_a != cell_b:
+                continue
+            sdc = sum(tables[s][ca[s]][cb[s]] for s in range(4))
+            if sdc > bound:
+                continue
+            exact = sum((x - y) ** 2 for x, y in zip(fixed[a], fixed[b]))
+            if exact <= bound:
+                want.append((a, b, sdc, exact))
+    assert got == sorted(want)
+    # the planted clones must survive the cascade
+    assert {(j, 1000 + j) for j in range(5)} <= {(r[0], r[1]) for r in got}
 
 
 # duplicated_char_fraction (d23): per-doc interval-merge semantics

@@ -69,6 +69,9 @@ def test_s06_and_d09_share_one_cell_exchange(spark):
     # one corpus scan in the executed plan, no corpus-sized broadcast
     from tabular_to_parquet_spark.operators import dedup as dd
 
+    # a cached embeddings frame from another test substitutes
+    # InMemoryTableScan for the parquet scan this test counts
+    spark.catalog.clearCache()
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     for df in (
         sim.knn_graph(emb, k=3),
@@ -156,27 +159,6 @@ def test_gd_checkpoint_rounds_truncates_static_plan(spark):
     # 1-row state appears as a LogicalRDD scan)
     assert "LogicalRDD" in plan_ck
     assert plan_ck.count("Aggregate") < plan_base.count("Aggregate") / 4
-
-
-def test_oracle_rewrite_requeues_query_at_sweep_head():
-    # r14 verdict item 3: d23/d25's oracles were rewritten window-free
-    # in r14; their pre-rewrite green rows (r12/r13) must not count as
-    # passes, so both re-queue at the sweep head until a driver row
-    # lands on the new oracle SQL
-    import __spark_entry__ as entry_mod
-
-    assert entry_mod._ORACLE_REWRITTEN_AT == {
-        "d23_dup_char_fraction": 14,
-        "d25_self_repeat_fraction": 14,
-    }
-    # no post-rewrite driver row exists yet -> treated as never-passed
-    assert "d23_dup_char_fraction" not in entry_mod._LAST_PASS
-    assert "d25_self_repeat_fraction" not in entry_mod._LAST_PASS
-    ordered = [n for n, _ in entry_mod._catalog_ordered()]
-    assert ordered.index("d23_dup_char_fraction") < 50
-    assert ordered.index("d25_self_repeat_fraction") < 50
-    # once a round >= 14 row lands, the requeue self-retires: the rule
-    # compares the row's round against the rewrite round, nothing else
 
 
 def test_bench_stamps_effective_cpus_and_runs_scale_probe():

@@ -338,24 +338,11 @@ def test_s10_shape_and_symmetric_diagonal(spark):
             assert int(r["sum_prod"]) >= 0  # sum of squares
 
 
-def test_s10_fast_twin_equals_exact_form(spark):
-    a = sorted(
-        CATALOG["s10_gram_matrix"].spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["i"], r["j"]),
-    )
-    b = sorted(
-        CATALOG["s10_gram_matrix_fast"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["i"], r["j"]),
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 def test_s10_fast_merges_partitions_exactly(spark, tmp_path):
     """Many partitions, values engineered so per-partition products
     are large: the decimal merge reproduces the single-partition
     total exactly."""
-    from tabular_to_parquet_spark.operators.similarity import gram_matrix_fast
+    from tabular_to_parquet_spark.operators.similarity import gram_matrix
 
     pdf = pd.DataFrame(
         {
@@ -369,11 +356,11 @@ def test_s10_fast_merges_partitions_exactly(spark, tmp_path):
     )
     one = {
         (r["i"], r["j"]): (r["n"], r["sum_fi"], r["sum_fj"], r["sum_prod"])
-        for r in gram_matrix_fast(sdf.coalesce(1)).collect()
+        for r in gram_matrix(sdf.coalesce(1)).collect()
     }
     many = {
         (r["i"], r["j"]): (r["n"], r["sum_fi"], r["sum_fj"], r["sum_prod"])
-        for r in gram_matrix_fast(sdf.repartition(16)).collect()
+        for r in gram_matrix(sdf.repartition(16)).collect()
     }
     assert one == many
     S = 1048576
@@ -381,39 +368,14 @@ def test_s10_fast_merges_partitions_exactly(spark, tmp_path):
     assert one[(0, 1)] == (200, 200 * S, -200 * S, str(-200 * S * S))
 
 
-def test_s05_fast_twin_equals_expression_form(spark):
-    a = sorted(
-        CATALOG["s05_nearest_centroid_confusion"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["label"], r["assigned"]),
-    )
-    b = sorted(
-        CATALOG["s05_nearest_centroid_confusion_fast"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["label"], r["assigned"]),
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert sum(r["n_vecs"] for r in a) == 500
-
-
-def test_s08_fast_twin_equals_join_form(spark):
-    a = sorted(
-        CATALOG["s08_kmeans_fixed"].spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["cid"], r["dim"]),
-    )
-    b = sorted(
-        CATALOG["s08_kmeans_fixed_fast"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["cid"], r["dim"]),
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_s08_fast_singletons(spark, tmp_path):
-    """The wave-5 eight-separated-vectors invariant holds through the
-    matmul path too: every seed keeps itself, centroids are the
-    fixed-pointed vectors."""
+def test_s08_fast_singletons(spark):
+    """The eight-separated-vectors invariant holds when the vectors are
+    spread over many partitions: the per-partition partial sums merge
+    to singleton clusters whose centroids are the fixed-pointed
+    vectors."""
     import math
+
+    from tabular_to_parquet_spark.operators.similarity import kmeans_fixed
 
     dim = 16
     vecs = []
@@ -422,19 +384,12 @@ def test_s08_fast_singletons(spark, tmp_path):
         v[2 * i] = 0.5 + 0.05 * i
         v[2 * i + 1] = -0.25
         vecs.append(v)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": list(range(1, 9)),
-            "embedding": vecs,
-            "label": [0] * 8,
-        }
-    )
-    spark.createDataFrame(pdf).select(
+    pdf = pd.DataFrame({"vec_id": list(range(1, 9)), "embedding": vecs})
+    sdf = spark.createDataFrame(pdf).select(
         "vec_id",
         F.col("embedding").cast("array<float>").alias("embedding"),
-        F.col("label").cast("int").alias("label"),
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    rows = CATALOG["s08_kmeans_fixed_fast"].spark(spark, str(tmp_path)).collect()
+    )
+    rows = kmeans_fixed(sdf.repartition(8)).collect()
     assert len(rows) == 8 * dim
     for r in rows:
         assert r["n_members"] == 1

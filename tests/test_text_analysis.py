@@ -106,6 +106,9 @@ def test_winnow_fingerprints_shared_substring(spark):
     # deterministic across runs
     fps2 = ta.winnow_fingerprints(df).collect()
     assert {(r.doc_id, r.fingerprint) for r in fps} == {(r.doc_id, r.fingerprint) for r in fps2}
+    # each doc is winnowed inside its own partition: no shuffle
+    plan = ta.winnow_fingerprints(df)._jdf.queryExecution().executedPlan()
+    assert "Exchange" not in plan.toString()
 
 
 def test_top_tokens_plan_is_take_ordered(spark):
@@ -131,19 +134,6 @@ def test_top_tokens_plan_is_take_ordered(spark):
     assert [r.rank for r in by_rank] == list(range(1, 21))
     key = [(-r.n, r.token) for r in by_rank]
     assert key == sorted(key)
-
-
-def test_winnow_rolling_matches_expression_path(spark, docs):
-    """The mapInPandas rolling-hash winnower must reproduce the
-    expression path's fingerprint set exactly — and with no shuffle in
-    its plan (the whole point: per-doc local computation)."""
-    expr_fps = {(r.doc_id, r.fingerprint)
-                for r in ta.winnow_fingerprints(docs).collect()}
-    roll = ta.winnow_fingerprints_rolling(docs)
-    roll_fps = {(r.doc_id, r.fingerprint) for r in roll.collect()}
-    assert roll_fps == expr_fps and len(expr_fps) > 0
-    plan = roll._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_repetition_stats_known_values(spark):

@@ -36,13 +36,39 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per test table under ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
+    """Mismatches between a Spark result and its oracle result (both
+    already ordered by the entry wrappers): row count, column names,
+    then exact values. Empty list == exact match."""
+    status = []
+    if len(sdf) != len(ddf):
+        status.append(f"rowcount {len(sdf)} vs {len(ddf)}")
+    if sorted(sdf.columns) != sorted(ddf.columns):
+        status.append(f"columns {sorted(sdf.columns)} vs {sorted(ddf.columns)}")
+    if not status:
+        a, b = normalize(sdf), normalize(ddf)
+        try:
+            pd.testing.assert_frame_equal(
+                a, b, check_dtype=False, check_exact=True
+            )
+        except AssertionError as exc:
+            status.append(f"values: {str(exc).splitlines()[-1][:200]}")
+    return status
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
     spark = get_spark("parity-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     failures = []
@@ -89,19 +115,7 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: oracle error: {exc}")
             continue
-        status = []
-        if len(sdf) != len(ddf):
-            status.append(f"rowcount {len(sdf)} vs {len(ddf)}")
-        if sorted(sdf.columns) != sorted(ddf.columns):
-            status.append(f"columns {sorted(sdf.columns)} vs {sorted(ddf.columns)}")
-        if not status:
-            a, b = normalize(sdf), normalize(ddf)
-            try:
-                pd.testing.assert_frame_equal(
-                    a, b, check_dtype=False, check_exact=True
-                )
-            except AssertionError as exc:
-                status.append(f"values: {str(exc).splitlines()[-1][:200]}")
+        status = compare(sdf, ddf)
         if status:
             failures.append(name)
             print(f"FAIL {name}: {'; '.join(status)}")

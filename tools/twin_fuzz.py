@@ -1,20 +1,24 @@
-"""Differential fuzz for the mapInArrow scale twins (s05/s08/s10).
+"""Differential fuzz of the Arrow-batched catalog operators against their
+DuckDB oracle SQL (s05/s08/s10 over embeddings, x07 over documents).
 
-The `_fast` twins (operators/similarity.py: nearest_centroid_confusion_fast,
-kmeans_fixed_fast, gram_matrix_fast) claim BIT-EXACT equality with their
-explode/join expression forms at any corpus size — that claim is
-oracle-gated on the fixed test tables, but the failure modes live in the
-corners the fixtures don't hit: odd dims, tiny corpora (fewer vectors
-than k), duplicate/identical vectors (cluster collapse, argmin ties),
-empty clusters, single-partition vs many-partition splits (the partial
-→ merge path), zero vectors, and negative / large-magnitude coordinates.
+Each operator has one implementation (operators/similarity.py:
+nearest_centroid_confusion, kmeans_fixed, gram_matrix;
+operators/text_analysis.py: winnow_fingerprints) that claims BIT-EXACT
+equality with the catalog oracle at any corpus size. The fixed test
+tables gate that claim at one geometry; the failure modes live in the
+corners they don't hit: odd dims, tiny corpora (fewer vectors than k),
+duplicate/identical vectors (cluster collapse, argmin ties), empty
+clusters, single-partition vs many-partition splits (the partial →
+merge path), zero vectors, negative / large-magnitude coordinates, and
+for winnowing: docs shorter than one window, mixed case and whitespace
+runs, non-ASCII letters.
 
-Each seed synthesizes a random corpus (vector count, dim, partition
-split, label pattern, duplicate/degenerate-vector mixture all drawn
-from the seed), runs BOTH catalog entries of each pair through the
-production code paths (extensions._emb is monkeypatched to serve the
-in-memory corpus — no parquet round-trip, same query bodies the driver
-certifies), and asserts exact frame equality.
+Each seed synthesizes a random corpus (sizes, dim, partition split,
+label pattern, degenerate-vector mixture and text shapes all drawn from
+the seed), runs each catalog query through the driver entry points
+(extensions._emb / _docs are patched to serve the in-memory corpus — the
+same query bodies the driver certifies) and its oracle SQL over the
+same rows in DuckDB, and compares them with tools/check_parity.compare.
 
 Usage: python tools/twin_fuzz.py [n_seeds] [seed0]
 """
@@ -25,20 +29,33 @@ import os
 import random
 import sys
 
+import duckdb
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-PAIRS = [
-    ("s10_gram_matrix", "s10_gram_matrix_fast"),
-    ("s05_nearest_centroid_confusion", "s05_nearest_centroid_confusion_fast"),
-    ("s08_kmeans_fixed", "s08_kmeans_fixed_fast"),
+EMB_QUERIES = [
+    "s10_gram_matrix",
+    "s05_nearest_centroid_confusion",
+    "s08_kmeans_fixed",
 ]
+DOC_QUERIES = ["x07_winnow_fingerprints"]
+
+EMB_SCHEMA = pa.schema(
+    [
+        ("vec_id", pa.int64()),
+        ("embedding", pa.list_(pa.float32())),
+        ("label", pa.int32()),
+    ]
+)
+DOC_SCHEMA = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
+
+_WORDS = ["alpha", "Beta", "GAMMA", "delta", "épée", "Straße", "naïve", "x", "42"]
+_GAPS = [" ", " ", " ", "  ", "\t", "\n", " \t "]
 
 
-def gen_corpus(seed: int) -> pd.DataFrame:
-    rng = random.Random(seed)
+def gen_embeddings(rng: random.Random) -> pa.Table:
     n = rng.randint(3, 90)
     dim = rng.choice([2, 3, 5, 8, 16, 31, 64])
     n_labels = rng.randint(1, 5)
@@ -66,21 +83,31 @@ def gen_corpus(seed: int) -> pd.DataFrame:
             v = np.array([rng.uniform(-1.0, 1.0) for _ in range(dim)])
         vecs.append(v.astype(np.float32))
 
-    return pd.DataFrame(
+    return pa.table(
         {
-            "vec_id": np.arange(n, dtype=np.int64),
+            "vec_id": list(range(n)),
             "embedding": [v.tolist() for v in vecs],
-            "label": np.array(
-                [rng.randrange(n_labels) for _ in range(n)], dtype=np.int32
-            ),
-        }
-    ), rng.randint(1, 8)
+            "label": [rng.randrange(n_labels) for _ in range(n)],
+        },
+        schema=EMB_SCHEMA,
+    )
 
 
-def frame_key(df: pd.DataFrame) -> list[tuple]:
-    df = df.reindex(sorted(df.columns), axis=1)
-    rows = [tuple(r) for r in df.itertuples(index=False)]
-    return sorted(rows, key=repr)
+def gen_documents(rng: random.Random) -> pa.Table:
+    n = rng.randint(1, 30)
+    shared = [rng.choice(_WORDS) for _ in range(rng.randint(3, 12))]
+    texts = []
+    for _ in range(n):
+        words = [rng.choice(_WORDS) for _ in range(rng.randint(0, 40))]
+        if rng.random() < 0.4:  # planted shared passage
+            at = rng.randint(0, len(words))
+            words[at:at] = shared
+        gaps = [rng.choice(_GAPS) for _ in words]
+        text = "".join(g + w for g, w in zip(gaps, words))
+        texts.append(text + rng.choice(["", " ", "\n"]))
+    return pa.table(
+        {"doc_id": list(range(n)), "text": texts}, schema=DOC_SCHEMA
+    )
 
 
 def main() -> int:
@@ -90,64 +117,54 @@ def main() -> int:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import types as T
-
+    import __spark_entry__ as entry_mod
     from tabular_to_parquet_spark.parity import extensions
-    from tabular_to_parquet_spark.parity.catalog import CATALOG
     from tabular_to_parquet_spark.session import get_spark
+    from tools.check_parity import compare
 
     spark = get_spark("twin-fuzz")
     # tiny corpora: big shuffle fan-out is pure overhead here
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
+    queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
 
     # seeds run concurrently (the per-seed jobs are tiny — scheduling
-    # latency, not CPU, dominates), so the _emb hook must be race-free:
-    # patch it ONCE with a registry lookup keyed by the fake sf_dir.
-    corpora: dict[str, object] = {}
-    extensions._emb = lambda _spark, sf_dir: corpora[sf_dir]
+    # latency, not CPU, dominates), so the table hooks must be race-free:
+    # patch them ONCE with a registry lookup keyed by the fake sf_dir.
+    frames: dict[str, dict[str, object]] = {}
+    extensions._emb = lambda _spark, sf_dir: frames[sf_dir]["embeddings"]
+    extensions._docs = lambda _spark, sf_dir: frames[sf_dir]["documents"]
 
     failures: list[tuple[int, str, str]] = []
     done = [0]
 
     def run_seed(seed: int):
         key = f"<mem:{seed}>"
-        pdf, parts = gen_corpus(seed)
-        df = spark.createDataFrame(pdf, schema=schema).repartition(parts)
-        df.persist()
-        corpora[key] = df
+        rng = random.Random(seed)
+        tables = {"embeddings": gen_embeddings(rng), "documents": gen_documents(rng)}
+        parts = rng.randint(1, 8)
+        con = duckdb.connect()
+        frames[key] = {}
+        for name, tbl in tables.items():
+            con.register(name, tbl)
+            df = spark.createDataFrame(tbl).repartition(parts)
+            frames[key][name] = df.persist()
         try:
-            for slow_name, fast_name in PAIRS:
+            for name in EMB_QUERIES + DOC_QUERIES:
                 try:
-                    slow = frame_key(
-                        CATALOG[slow_name].spark(spark, key).toPandas()
-                    )
-                    fast = frame_key(
-                        CATALOG[fast_name].spark(spark, key).toPandas()
-                    )
+                    sdf = queries[name](spark, key).toPandas()
+                    ddf = con.sql(oracles[name]).df()
                 except Exception as exc:  # noqa: BLE001
                     failures.append(
-                        (seed, slow_name, f"error: {str(exc).splitlines()[0][:160]}")
+                        (seed, name, f"error: {str(exc).splitlines()[0][:160]}")
                     )
                     continue
-                if slow != fast:
-                    diff = [
-                        (a, b) for a, b in zip(slow, fast) if a != b
-                    ][:3]
-                    failures.append(
-                        (seed, slow_name,
-                         f"mismatch rows={len(slow)}/{len(fast)} first={diff}")
-                    )
+                status = compare(sdf, ddf)
+                if status:
+                    failures.append((seed, name, "; ".join(status)))
         finally:
-            corpora.pop(key, None)
-            df.unpersist()
+            for df in frames.pop(key).values():
+                df.unpersist()
+            con.close()
         done[0] += 1
         if done[0] % 100 == 0:
             print(
@@ -160,7 +177,10 @@ def main() -> int:
 
     for seed, name, reason in failures:
         print(f"FAIL seed={seed} {name}: {reason}")
-    print(f"{n_seeds - len(set(f[0] for f in failures))}/{n_seeds} twin seeds match")
+    print(
+        f"{n_seeds - len(set(f[0] for f in failures))}/{n_seeds} seeds "
+        "match their oracles"
+    )
     return 1 if failures else 0
 
 
